@@ -5,9 +5,12 @@ SUDAN_UNHCR, SUDAN_ILO, discovery functions — reference
 src/sudan/{worldbank,who,fao,unhcr,ilo,info}/) becomes a Python
 function returning a DataFrame with the reference's exact schema.
 
-Bind-phase validation (empty indicator, unknown country, required
-query) happens eagerly, before any plan is built — mirroring DuckDB's
-Bind errors with the same messages.
+Each provider function is one entry of TABLE_FUNCTIONS (schema,
+required parameters, DataSource defaults, year column, fetch, samples),
+shared with the `sudan` DataSource (sources/datasource.py). `bind` is
+the Bind phase of both: it checks the provider, the parameters and the
+countries eagerly, before any plan is built, with the reference's
+messages. `provider_rows` is their Init + Execute for one country.
 
 Execution model at scale: for N countries the row build is
 parallelized per country (the live path fetches one country per input
@@ -22,6 +25,7 @@ so a flaky network degrades to the embedded data, never to an error.
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -30,39 +34,6 @@ from duckdb_sudan__spark.oracle import values_sql
 from duckdb_sudan__spark.providers import http, samples
 from duckdb_sudan__spark.providers.pushdown import YearFilter
 from duckdb_sudan__spark.providers.registry import PROVIDERS, resolve_countries, validate_country_codes
-
-
-def _check_countries(countries: list[str] | None) -> list[str]:
-    if countries and not validate_country_codes(countries):
-        raise ValueError(
-            "SUDAN: Invalid country code. Supported: SDN, EGY, ETH, TCD, SSD, ERI, LBY, CAF (ISO2 also accepted)."
-        )
-    return resolve_countries(countries)
-
-
-def _apply_year_filter(rows: list[tuple], year_idx: int, yf: YearFilter | None) -> list[tuple]:
-    if yf is None or not yf.active:
-        return rows
-    return [r for r in rows if yf.contains(r[year_idx])]
-
-
-def _live_or_sample_rows(
-    countries: list[str],
-    fetch_one: Callable[[str], list[tuple]],
-    sample_all: Callable[[list[str]], list[tuple]],
-    offline: bool,
-) -> list[tuple]:
-    """Reference Init loop (wb_functions.cpp:236-243): fetch per
-    country in order. Offline — or when a country's fetch yields no
-    rows (network down, 4xx, parse failure) — that country is served
-    from the embedded samples instead."""
-    if offline:
-        return sample_all(countries)
-    rows: list[tuple] = []
-    for iso3 in countries:
-        fetched = fetch_one(iso3)
-        rows.extend(fetched if fetched else sample_all([iso3]))
-    return rows
 
 
 # -- schemas (exact reference column names/types) ----------------------------
@@ -165,6 +136,109 @@ SEARCH_SCHEMA = T.StructType(
 )
 
 
+# -- the provider table ------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class TableFunction:
+    """Everything Bind, Init and Execute need to know about one provider.
+    ``params`` are the required parameters in the api function's
+    positional order; ``fetch`` and ``samples`` take them as a dict."""
+
+    schema: T.StructType
+    params: tuple[str, ...]
+    defaults: dict[str, str]  # DataSource option defaults
+    year_idx: int  # position of `year` in a row
+    fetch: Callable[[dict, str, YearFilter, http.HttpSettings | None], list[tuple]]
+    samples: Callable[[dict, list[str]], list[tuple]]
+    choices: dict[str, tuple[str, ...]] = field(default_factory=dict)  # parameter -> valid values
+
+
+# fetch goes through the `http` module attribute at call time, so a
+# patched http.fetch_* (tests, tracing) is the one that runs
+TABLE_FUNCTIONS = {
+    "worldbank": TableFunction(
+        WORLDBANK_SCHEMA, ("indicator",), {}, 4,
+        fetch=lambda p, iso3, yf, st: http.fetch_worldbank_pages(p["indicator"], iso3, yf, st),
+        samples=lambda p, cs: samples.worldbank_rows(p["indicator"], cs),
+    ),
+    "who": TableFunction(
+        WHO_SCHEMA, ("indicator",), {}, 3,
+        fetch=lambda p, iso3, yf, st: http.fetch_who(p["indicator"], iso3, yf, st),
+        samples=lambda p, cs: samples.who_rows(p["indicator"], cs),
+    ),
+    "fao": TableFunction(
+        FAO_SCHEMA, ("dataset", "element"), {"dataset": "QCL", "element": "production"}, 4,
+        fetch=lambda p, iso3, yf, st: http.fetch_fao(p["dataset"], p["element"], iso3, yf, st),
+        samples=lambda p, cs: samples.fao_rows(p["dataset"], p["element"], cs),
+    ),
+    "unhcr": TableFunction(
+        UNHCR_SCHEMA, ("population_type",), {"population_type": "refugees"}, 0,
+        fetch=lambda p, iso3, yf, st: http.fetch_unhcr(p["population_type"], iso3, yf, st),
+        samples=lambda p, cs: samples.unhcr_rows(p["population_type"], cs),
+        choices={"population_type": samples.UNHCR_POPULATION_TYPES},
+    ),
+    "ilo": TableFunction(
+        ILO_SCHEMA, ("indicator",), {}, 4,
+        fetch=lambda p, iso3, yf, st: http.fetch_ilo(p["indicator"], iso3, yf, st),
+        samples=lambda p, cs: samples.ilo_rows(p["indicator"], cs),
+    ),
+}
+
+
+def table_function(provider: str) -> TableFunction:
+    """The provider's entry; an unknown provider is a Bind error."""
+    if provider not in TABLE_FUNCTIONS:
+        raise ValueError(f"SUDAN: Unknown provider '{provider}'. Valid: {', '.join(sorted(TABLE_FUNCTIONS))}.")
+    return TABLE_FUNCTIONS[provider]
+
+
+def bind(provider: str, params: dict, countries: list[str] | None) -> list[str]:
+    """Bind phase of both paths (reference *_functions.cpp Bind): check
+    the provider, its parameters and the countries, and return the
+    resolved ISO3 list."""
+    fn = table_function(provider)
+    for key in fn.params:
+        if not params.get(key):
+            raise ValueError(f"SUDAN: The {key} parameter cannot be empty.")
+    for key, valid in fn.choices.items():
+        if params[key] not in valid:
+            raise ValueError(f"SUDAN: Invalid {key} '{params[key]}'. Valid: {', '.join(valid)}.")
+    if countries and not validate_country_codes(countries):
+        raise ValueError(
+            "SUDAN: Invalid country code. Supported: SDN, EGY, ETH, TCD, SSD, ERI, LBY, CAF (ISO2 also accepted)."
+        )
+    return resolve_countries(countries)
+
+
+def provider_rows(
+    provider: str,
+    params: dict,
+    iso3: str,
+    yf: YearFilter,
+    offline: bool,
+    settings: http.HttpSettings | None = None,
+) -> list[tuple]:
+    """Init + Execute for one country (reference Init loop,
+    wb_functions.cpp:236-243): the live fetch unless offline, the
+    embedded samples when offline or when the fetch yields no rows
+    (network down, 4xx, parse failure), then the year filter."""
+    fn = TABLE_FUNCTIONS[provider]
+    rows = [] if offline else fn.fetch(params, iso3, yf, settings)
+    if not rows:
+        rows = fn.samples(params, [iso3])
+    if yf.active:
+        rows = [r for r in rows if yf.contains(r[fn.year_idx])]
+    return rows
+
+
+def _table(spark, provider, params, countries, year_filter, offline, settings) -> DataFrame:
+    iso3s = bind(provider, params, countries)
+    yf = year_filter or YearFilter()
+    rows = [r for iso3 in iso3s for r in provider_rows(provider, params, iso3, yf, offline, settings)]
+    return spark.createDataFrame(rows, TABLE_FUNCTIONS[provider].schema)
+
+
 # -- data functions ----------------------------------------------------------
 
 
@@ -179,16 +253,7 @@ def sudan_worldbank(
     """SUDAN_WorldBank(indicator, countries := [...]). Reference
     wb_functions.cpp:57-103; live path = the paged fetch loop of
     wb_functions.cpp:110-210 with date=START:END pushed into the URL."""
-    if not indicator:
-        raise ValueError("SUDAN: The indicator parameter cannot be empty.")
-    yf = year_filter or YearFilter()
-    rows = _live_or_sample_rows(
-        _check_countries(countries),
-        lambda iso3: http.fetch_worldbank_pages(indicator, iso3, yf, settings),
-        lambda cs: samples.worldbank_rows(indicator, cs),
-        offline,
-    )
-    return spark.createDataFrame(_apply_year_filter(rows, 4, year_filter), WORLDBANK_SCHEMA)
+    return _table(spark, "worldbank", {"indicator": indicator}, countries, year_filter, offline, settings)
 
 
 def sudan_who(
@@ -203,16 +268,7 @@ def sudan_who(
     who_functions.cpp:52-91; live path = FetchWHOData
     (who_functions.cpp:107-205) with the year range merged into the
     OData $filter."""
-    if not indicator:
-        raise ValueError("SUDAN: The indicator parameter cannot be empty.")
-    yf = year_filter or YearFilter()
-    rows = _live_or_sample_rows(
-        _check_countries(countries),
-        lambda iso3: http.fetch_who(indicator, iso3, yf, settings),
-        lambda cs: samples.who_rows(indicator, cs),
-        offline,
-    )
-    return spark.createDataFrame(_apply_year_filter(rows, 3, year_filter), WHO_SCHEMA)
+    return _table(spark, "who", {"indicator": indicator}, countries, year_filter, offline, settings)
 
 
 def sudan_fao(
@@ -228,16 +284,8 @@ def sudan_fao(
     fao_functions.cpp:55-95; live path = FetchFAOData
     (fao_functions.cpp:205-232): numeric area code, limit=500, element
     matched client-side."""
-    if not dataset or not element:
-        raise ValueError("SUDAN: The dataset and element parameters cannot be empty.")
-    yf = year_filter or YearFilter()
-    rows = _live_or_sample_rows(
-        _check_countries(countries),
-        lambda iso3: http.fetch_fao(dataset, element, iso3, yf, settings),
-        lambda cs: samples.fao_rows(dataset, element, cs),
-        offline,
-    )
-    return spark.createDataFrame(_apply_year_filter(rows, 4, year_filter), FAO_SCHEMA)
+    params = {"dataset": dataset, "element": element}
+    return _table(spark, "fao", params, countries, year_filter, offline, settings)
 
 
 def sudan_unhcr(
@@ -252,21 +300,8 @@ def sudan_unhcr(
     unhcr_functions.cpp:52-92; live path = FetchUNHCRData
     (unhcr_functions.cpp:228-245): one unified-endpoint fetch per
     {coo, coa} per country."""
-    if not population_type:
-        raise ValueError("SUDAN: The population_type parameter cannot be empty.")
-    if population_type not in samples.UNHCR_POPULATION_TYPES:
-        raise ValueError(
-            f"SUDAN: Invalid population_type '{population_type}'. "
-            f"Valid: {', '.join(samples.UNHCR_POPULATION_TYPES)}."
-        )
-    yf = year_filter or YearFilter()
-    rows = _live_or_sample_rows(
-        _check_countries(countries),
-        lambda iso3: http.fetch_unhcr(population_type, iso3, yf, settings),
-        lambda cs: samples.unhcr_rows(population_type, cs),
-        offline,
-    )
-    return spark.createDataFrame(_apply_year_filter(rows, 0, year_filter), UNHCR_SCHEMA)
+    params = {"population_type": population_type}
+    return _table(spark, "unhcr", params, countries, year_filter, offline, settings)
 
 
 def sudan_ilo(
@@ -281,16 +316,7 @@ def sudan_ilo(
     ilo_functions.cpp:50-87; live path = FetchILOData
     (ilo_functions.cpp:102-350): SDMX key-suffix ladder + structure
     walk."""
-    if not indicator:
-        raise ValueError("SUDAN: The indicator parameter cannot be empty.")
-    yf = year_filter or YearFilter()
-    rows = _live_or_sample_rows(
-        _check_countries(countries),
-        lambda iso3: http.fetch_ilo(indicator, iso3, yf, settings),
-        lambda cs: samples.ilo_rows(indicator, cs),
-        offline,
-    )
-    return spark.createDataFrame(_apply_year_filter(rows, 4, year_filter), ILO_SCHEMA)
+    return _table(spark, "ilo", {"indicator": indicator}, countries, year_filter, offline, settings)
 
 
 # -- discovery / metadata ----------------------------------------------------

@@ -2,16 +2,19 @@
 fetch, and per-provider response parsers.
 
 Parity map (reference → here):
-- http_client.cpp:61-106 ExtractHttpSettings → HttpSettings /
-  extract_http_settings (timeout, keep-alive, proxy + basic auth,
-  user-agent, cache toggle — read from ``spark.sudan.http.*`` conf
-  keys instead of DuckDB settings/secrets).
+- http_client.cpp:61-106 ExtractHttpSettings → HttpSettings (timeout,
+  response-cache toggle; the api functions take one as ``settings``).
+  Proxies come from urllib's standard ``http_proxy`` / ``https_proxy``
+  / ``no_proxy`` environment variables, which reach the Spark Python
+  workers too; credentials ride in the URL
+  (``http://user:pw@host:port``) and go out as Proxy-Authorization.
 - wb_functions.cpp:110-210 FetchWorldBankData → fetch_worldbank_pages
   (page loop over `pages` metadata, date=START:END filter).
 - who_functions.cpp:107-205 FetchWHOData → fetch_who / parse_who.
 - fao_functions.cpp:121-232 ParseFAOPage/FetchFAOData → fetch_fao /
   parse_fao (area=numeric FAO code, output_type=objects&limit=500,
-  element filtered CLIENT-side by partial case-insensitive match).
+  year_start=&year_end= pushed into the URL, element filtered
+  CLIENT-side by partial case-insensitive match).
 - unhcr_functions.cpp:108-245 → fetch_unhcr / parse_unhcr (unified
   /population/v1/population/ endpoint, limit=10000&cf_type=iso, one
   fetch per param in {coo, coa}, zero-valued rows skipped).
@@ -20,19 +23,22 @@ Parity map (reference → here):
   SDMX-JSON 1.0/2.0 structure walk for SEX / AGE|CLASSIF1 /
   TIME_PERIOD).
 
-The test container has no network: URL building and parsing are
-unit-tested against canned fixtures; the fetch itself returns [] on
-any failure and callers fall back to the offline samples.
+URL building and parsing are unit-tested against canned fixtures and
+the socket path against loopback servers, so the tests need no
+network. The fetch itself returns [] on any failure and callers fall
+back to the offline samples.
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from contextlib import contextmanager
+from dataclasses import dataclass
 
 from duckdb_sudan__spark.providers.cache import ResponseCache
 from duckdb_sudan__spark.providers.pushdown import (
     YearFilter,
+    encode_fao,
     encode_ilo,
     encode_unhcr,
     encode_who,
@@ -40,8 +46,7 @@ from duckdb_sudan__spark.providers.pushdown import (
 )
 
 DEFAULT_TIMEOUT = 90
-DEFAULT_MAX_CONCURRENCY = 8
-DEFAULT_USER_AGENT = "duckdb_sudan__spark/0.2"
+USER_AGENT = "duckdb_sudan__spark/0.2"
 
 
 @dataclass(frozen=True)
@@ -49,63 +54,7 @@ class HttpSettings:
     """HTTP client configuration (http_client.cpp:61-106)."""
 
     timeout: int = DEFAULT_TIMEOUT
-    keep_alive: bool = True
-    max_concurrency: int = DEFAULT_MAX_CONCURRENCY
-    follow_redirects: bool = True
     use_cache: bool = True
-    user_agent: str = DEFAULT_USER_AGENT
-    proxy: str = ""
-    proxy_username: str = ""
-    proxy_password: str = ""
-    extra_headers: dict = field(default_factory=dict)
-
-
-_CONF_PREFIX = "spark.sudan.http."
-
-
-def extract_http_settings(conf=None) -> HttpSettings:
-    """Build HttpSettings from a Spark conf (RuntimeConfig or plain
-    mapping) — the Spark-native analogue of the reference's
-    ExtractHttpSettings reading DuckDB settings + the http secret
-    (http_client.cpp:61-106). Recognized keys (all optional)::
-
-        spark.sudan.http.timeout            seconds, default 90
-        spark.sudan.http.keepAlive          true/false
-        spark.sudan.http.maxConcurrency     int
-        spark.sudan.http.followRedirects    true/false
-        spark.sudan.http.requestCache       true/false
-        spark.sudan.http.userAgent          string
-        spark.sudan.http.proxy              host:port
-        spark.sudan.http.proxyUsername      string
-        spark.sudan.http.proxyPassword      string
-    """
-
-    def get(key: str, default: str) -> str:
-        if conf is None:
-            return default
-        full = _CONF_PREFIX + key
-        try:
-            if hasattr(conf, "get"):
-                val = conf.get(full, default)
-                return default if val is None else str(val)
-        except Exception:
-            return default
-        return default
-
-    def as_bool(s: str) -> bool:
-        return str(s).strip().lower() in ("1", "true", "yes", "on")
-
-    return HttpSettings(
-        timeout=int(get("timeout", str(DEFAULT_TIMEOUT))),
-        keep_alive=as_bool(get("keepAlive", "true")),
-        max_concurrency=int(get("maxConcurrency", str(DEFAULT_MAX_CONCURRENCY))),
-        follow_redirects=as_bool(get("followRedirects", "true")),
-        use_cache=as_bool(get("requestCache", "true")),
-        user_agent=get("userAgent", DEFAULT_USER_AGENT),
-        proxy=get("proxy", ""),
-        proxy_username=get("proxyUsername", ""),
-        proxy_password=get("proxyPassword", ""),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -123,6 +72,20 @@ PROVIDER_BASES = {
     "unhcr": "https://api.unhcr.org",
     "ilo": "https://sdmx.ilo.org",
 }
+
+
+@contextmanager
+def provider_bases(base_url: str):
+    """Point every provider at ``base_url`` (scheme+host) inside the
+    block and restore the previous bases after it; an empty
+    ``base_url`` changes nothing."""
+    saved = dict(PROVIDER_BASES)
+    if base_url:
+        PROVIDER_BASES.update(dict.fromkeys(PROVIDER_BASES, base_url))
+    try:
+        yield
+    finally:
+        PROVIDER_BASES.update(saved)
 
 
 def build_worldbank_url(indicator: str, iso3: str, yf: YearFilter, page: int = 1) -> str:
@@ -155,14 +118,16 @@ def fao_area_code(iso3: str) -> str:
     return FAO_AREA_CODES.get(iso3, iso3)
 
 
-def build_fao_url(dataset: str, iso3: str) -> str:
+def build_fao_url(dataset: str, iso3: str, yf: YearFilter = YearFilter()) -> str:
     """fao_functions.cpp:210-216: FAOSTAT caps limit at ~500 and has no
     offset pagination; `element` is NOT a URL parameter — it's matched
     client-side against the Element field (partial, case-insensitive)."""
-    return (
+    url = (
         f"{PROVIDER_BASES['fao']}/api/v1/en/data/{dataset}"
         f"?area={fao_area_code(iso3)}&output_type=objects&limit=500"
     )
+    year_param = encode_fao(yf)
+    return f"{url}&{year_param}" if year_param else url
 
 
 def build_unhcr_url(param_name: str, iso3: str, yf: YearFilter) -> str:
@@ -206,33 +171,17 @@ def http_get_json(url: str, settings: HttpSettings | None = None) -> dict | list
     body = cache.get(url) if s.use_cache else None
     if not body:
         try:
-            from urllib.request import (
-                HTTPBasicAuthHandler,
-                HTTPPasswordMgrWithDefaultRealm,
-                ProxyHandler,
-                Request,
-                build_opener,
-            )
+            from urllib.request import Request, build_opener
 
-            handlers = []
-            if s.proxy:
-                proxy = s.proxy if "://" in s.proxy else f"http://{s.proxy}"
-                handlers.append(ProxyHandler({"http": proxy, "https": proxy}))
-                if s.proxy_username:
-                    mgr = HTTPPasswordMgrWithDefaultRealm()
-                    mgr.add_password(None, proxy, s.proxy_username, s.proxy_password)
-                    handlers.append(HTTPBasicAuthHandler(mgr))
-            opener = build_opener(*handlers)
-            headers = {"User-Agent": s.user_agent, **s.extra_headers}
-            if s.keep_alive:
-                headers.setdefault("Connection", "keep-alive")
             # the WHO OData $filter carries literal spaces (reference URL
             # shape, who_functions.cpp:110-112) — a raw space in the
             # request line is malformed HTTP and real servers 400 it, so
             # percent-encode it at send time (cache stays keyed on the
-            # readable URL)
-            req = Request(url.replace(" ", "%20"), headers=headers)
-            with opener.open(req, timeout=s.timeout) as resp:
+            # readable URL). A new opener per request reads the *_proxy
+            # environment variables as they are now, not as they were
+            # at the process's first request.
+            req = Request(url.replace(" ", "%20"), headers={"User-Agent": USER_AGENT})
+            with build_opener().open(req, timeout=s.timeout) as resp:
                 if getattr(resp, "status", 200) != 200:
                     return None
                 body = resp.read().decode("utf-8")
@@ -397,8 +346,8 @@ def parse_fao(doc, element: str, dataset: str) -> list[tuple]:
 def fetch_fao(
     dataset: str, element: str, iso3: str, yf: YearFilter, settings: HttpSettings | None = None
 ) -> list[tuple]:
-    rows = parse_fao(http_get_json(build_fao_url(dataset, iso3), settings), element, dataset)
-    # FAOSTAT has no year URL params the API honors — filter client-side
+    rows = parse_fao(http_get_json(build_fao_url(dataset, iso3, yf), settings), element, dataset)
+    # the year range is in the URL; filter again in case the server ignores it
     return [r for r in rows if yf.contains(r[4])] if yf.active else rows
 
 

@@ -7,10 +7,13 @@ on its own executor — the 3-phase Bind/Init/Execute model of the
 reference (wb_functions.cpp:44-280) maps to
 schema()/partitions()/read(partition).
 
-Bind-phase validation happens on the DRIVER in `SudanReader.__init__`
-(provider name, required parameters, country codes), raising the same
-"SUDAN: ..." messages as the api functions — mirroring the reference's
-Bind errors instead of a raw executor-side KeyError.
+Every per-provider fact (schema, required options and their
+defaults, year column, fetch, samples) comes from the provider table
+in providers/api.py (`api.TABLE_FUNCTIONS`), which the api functions
+use too. `SudanReader.__init__` runs `api.bind` on the DRIVER, so a bad
+provider, parameter or country raises the api functions' "SUDAN: ..."
+message at plan time, mirroring the reference's Bind errors instead of
+a raw executor-side KeyError.
 
 Year-range pushdown is driven by the DataSource filter-pushdown API:
 `SudanReader.pushFilters` absorbs year >=/>/<=/</== predicates from
@@ -21,9 +24,11 @@ Catalyst to evaluate. Explicit `year_start`/`year_end` options are
 still honored and combined (intersection) with pushed filters.
 
 Offline mode (default: `offline=true`) serves the deterministic
-embedded samples; `offline=false` runs the per-country fetch loops in
-providers/http.py on the EXECUTOR that owns the country partition,
-falling back to that country's samples when the fetch yields nothing.
+embedded samples; `offline=false` runs `api.provider_rows` — the
+per-country fetch loops in providers/http.py, falling back to that
+country's samples when the fetch yields nothing — on the EXECUTOR that
+owns the country partition. The `base_url` option points every
+provider at another scheme+host for that read only.
 """
 
 from __future__ import annotations
@@ -42,60 +47,10 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     SimpleDataSourceStreamReader,
 )
+from pyspark.sql.types import StructType
 
-from duckdb_sudan__spark.providers import http, samples
+from duckdb_sudan__spark.providers import api, http
 from duckdb_sudan__spark.providers.pushdown import YearFilter
-from duckdb_sudan__spark.providers.registry import resolve_countries, validate_country_codes
-
-# provider → (sample row builder taking (opts, countries), year column index)
-_PROVIDER_META = {
-    "worldbank": (lambda opts, cs: samples.worldbank_rows(opts["indicator"], cs), 4),
-    "who": (lambda opts, cs: samples.who_rows(opts["indicator"], cs), 3),
-    "fao": (lambda opts, cs: samples.fao_rows(opts["dataset"], opts["element"], cs), 4),
-    "unhcr": (lambda opts, cs: samples.unhcr_rows(opts["population_type"], cs), 0),
-    "ilo": (lambda opts, cs: samples.ilo_rows(opts["indicator"], cs), 4),
-}
-
-# provider → live fetch for ONE country (reference Init loops)
-_PROVIDER_FETCH = {
-    "worldbank": lambda opts, iso3, yf, st: http.fetch_worldbank_pages(opts["indicator"], iso3, yf, st),
-    "who": lambda opts, iso3, yf, st: http.fetch_who(opts["indicator"], iso3, yf, st),
-    "fao": lambda opts, iso3, yf, st: http.fetch_fao(opts["dataset"], opts["element"], iso3, yf, st),
-    "unhcr": lambda opts, iso3, yf, st: http.fetch_unhcr(opts["population_type"], iso3, yf, st),
-    "ilo": lambda opts, iso3, yf, st: http.fetch_ilo(opts["indicator"], iso3, yf, st),
-}
-
-# provider → required string options checked at bind time (reference
-# Bind functions; fao defaults mirror the api test surface)
-_REQUIRED_OPTIONS = {
-    "worldbank": ("indicator",),
-    "who": ("indicator",),
-    "fao": ("dataset", "element"),
-    "unhcr": ("population_type",),
-    "ilo": ("indicator",),
-}
-
-_OPTION_DEFAULTS = {
-    "fao": {"dataset": "QCL", "element": "production"},
-    "unhcr": {"population_type": "refugees"},
-}
-
-_PROVIDER_DDL = {
-    "worldbank": (
-        "indicator_id string, indicator_name string, country string, "
-        "country_name string, year int, value double"
-    ),
-    "who": (
-        "indicator_code string, indicator_name string, country string, "
-        "year int, sex string, value double, region string"
-    ),
-    "fao": "dataset string, area string, item string, element string, year int, value double, unit string",
-    "unhcr": (
-        "year int, population_type string, country_origin string, country_origin_name string, "
-        "country_asylum string, country_asylum_name string, value bigint"
-    ),
-    "ilo": "indicator string, country string, sex string, classif1 string, year int, value double",
-}
 
 _YEAR_COLUMN = ("year",)
 
@@ -107,32 +62,11 @@ class _CountryPartition(InputPartition):
 
 class SudanReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.options = dict(options)
-        self.provider = self.options.get("provider", "worldbank")
-        if self.provider not in _PROVIDER_META:
-            raise ValueError(
-                f"SUDAN: Unknown provider '{self.provider}'. Valid: {', '.join(sorted(_PROVIDER_META))}."
-            )
-        for key, default in _OPTION_DEFAULTS.get(self.provider, {}).items():
-            self.options.setdefault(key, default)
-        # bind-phase validation on the driver — same messages as api.py
-        for key in _REQUIRED_OPTIONS[self.provider]:
-            if not self.options.get(key):
-                raise ValueError(f"SUDAN: The {key} parameter cannot be empty.")
-        if self.provider == "unhcr":
-            ptype = self.options["population_type"]
-            if ptype not in samples.UNHCR_POPULATION_TYPES:
-                raise ValueError(
-                    f"SUDAN: Invalid population_type '{ptype}'. "
-                    f"Valid: {', '.join(samples.UNHCR_POPULATION_TYPES)}."
-                )
+        # bind phase on the driver: the api functions' checks and messages
+        self.provider = options.get("provider", "worldbank")
+        self.options = {**api.table_function(self.provider).defaults, **options}
         countries = self.options.get("countries")
-        requested = countries.split(",") if countries else None
-        if requested and not validate_country_codes(requested):
-            raise ValueError(
-                "SUDAN: Invalid country code. Supported: SDN, EGY, ETH, TCD, SSD, ERI, LBY, CAF (ISO2 also accepted)."
-            )
-        self.countries = resolve_countries(requested)
+        self.countries = api.bind(self.provider, self.options, countries.split(",") if countries else None)
         self.offline = str(self.options.get("offline", "true")).lower() != "false"
         self.year_filter = YearFilter(
             int(self.options.get("year_start", 0)), int(self.options.get("year_end", 0))
@@ -192,22 +126,12 @@ class SudanReader(DataSourceReader):
         return [_CountryPartition(c) for c in self.countries]
 
     def read(self, partition: _CountryPartition) -> Iterator[tuple]:
-        build, year_idx = _PROVIDER_META[self.provider]
-        rows: list[tuple] = []
-        if not self.offline:
-            # optional scheme+host override (mirror, corporate proxy,
-            # loopback test server). read() runs in a Python worker
-            # process, so the module-global must be set HERE, not on the
-            # driver — driver-side mutation never reaches the worker.
-            base_url = self.options.get("base_url", "")
-            if base_url:
-                for k in http.PROVIDER_BASES:
-                    http.PROVIDER_BASES[k] = base_url
-            rows = _PROVIDER_FETCH[self.provider](self.options, partition.iso3, self.year_filter, None)
-        if not rows:
-            rows = build(self.options, [partition.iso3])
-        if self.year_filter.active:
-            rows = [r for r in rows if self.year_filter.contains(r[year_idx])]
+        # optional scheme+host override (mirror, loopback test server),
+        # set for this read only: a reused Python worker keeps module
+        # globals, so a later read without base_url must see the defaults
+        base_url = "" if self.offline else self.options.get("base_url", "")
+        with http.provider_bases(base_url):
+            rows = api.provider_rows(self.provider, self.options, partition.iso3, self.year_filter, self.offline)
         yield from rows
 
 
@@ -231,16 +155,13 @@ class SudanStreamReader(SimpleDataSourceStreamReader):
     reference's Bind error at plan time."""
 
     def __init__(self, options: dict):
-        # reuse the batch reader's bind validation + sample assembly
-        self._bound = SudanReader(dict(options))
+        b = SudanReader(options)  # the batch reader's bind phase
         self._per_batch = int(options.get("years_per_batch", 0) or 0)
-        build, year_idx = _PROVIDER_META[self._bound.provider]
-        rows = []
-        for iso3 in self._bound.countries:
-            rows.extend(build(self._bound.options, [iso3]))
-        if self._bound.year_filter.active:
-            rows = [r for r in rows if self._bound.year_filter.contains(r[year_idx])]
-        self._year_idx = year_idx
+        rows = [
+            r for iso3 in b.countries
+            for r in api.provider_rows(b.provider, b.options, iso3, b.year_filter, offline=True)
+        ]
+        year_idx = api.TABLE_FUNCTIONS[b.provider].year_idx
         self._years = sorted({r[year_idx] for r in rows})
         self._by_year = {y: [r for r in rows if r[year_idx] == y] for y in self._years}
 
@@ -266,13 +187,8 @@ class SudanDataSource(DataSource):
     def name(cls) -> str:
         return "sudan"
 
-    def schema(self) -> str:
-        provider = self.options.get("provider", "worldbank")
-        if provider not in _PROVIDER_DDL:
-            raise ValueError(
-                f"SUDAN: Unknown provider '{provider}'. Valid: {', '.join(sorted(_PROVIDER_DDL))}."
-            )
-        return _PROVIDER_DDL[provider]
+    def schema(self) -> StructType:
+        return api.table_function(self.options.get("provider", "worldbank")).schema
 
     def reader(self, schema) -> SudanReader:
         return SudanReader(self.options)

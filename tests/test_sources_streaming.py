@@ -76,6 +76,11 @@ def test_http_url_builders():
     assert build_fao_url("QCL", "SDN") == (
         "https://faostatservices.fao.org/api/v1/en/data/QCL?area=276&output_type=objects&limit=500"
     )
+    # FAO year range: year_start=&year_end= (filter_pushdown.cpp:42-59)
+    assert build_fao_url("QCL", "SDN", yf) == (
+        "https://faostatservices.fao.org/api/v1/en/data/QCL?area=276&output_type=objects&limit=500"
+        "&year_start=2010&year_end=2020"
+    )
     # UNHCR: unified population endpoint, cf_type=iso, coo/coa as the param
     assert build_unhcr_url("coo", "SDN", yf) == (
         "https://api.unhcr.org/population/v1/population/"
